@@ -1,19 +1,10 @@
-"""Seeded input tables for the benchmark workloads.
+"""Seeded input tables for the resumable-write workload.
 
-The engine's queries read a table directory (``events``, ``documents``,
-``embeddings``, ``lineitem`` parquet files). The benchmark reads no data
-outside its checkout, so it writes tables of the same schema, row counts
-and value distributions as the engine's test tables from ``--seed``:
-
-- scale factor ``sf`` sets the row counts (sf0.1: 100k events over
-  1,500 users, 5,000 documents, 2,000 embeddings, 600k line items);
-- every column is drawn from one ``numpy.random.default_rng(seed)``
-  stream, so a seed always gives byte-identical tables.
-
-The skewed sequence table for the resumable-write workload comes from
-the package's own ``datagen`` generators; this module only chooses the
-doc lengths (the longest doc holds half of all tokens) and splits the
-table over several parquet files.
+The skewed sequence table comes from the package's own ``datagen``
+generators; this module only chooses the doc lengths (the longest doc
+holds half of all tokens) and splits the table over several parquet
+files. The operator suite needs no generator: it reads the engine's own
+seed-42 test tables, checked in under ``perfbench/data``.
 """
 
 from __future__ import annotations
@@ -22,110 +13,6 @@ import os
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-VOCAB = (
-    "the a spark batch part line column order small sort fast value scan hash slow "
-    "group agg filter query big key window row table stream merge data join customer "
-    "vector"
-).split()
-LANGS = ["en", "en", "en", "de", "fr", "es", "zh"]
-EPOCH_2024_US = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z in microseconds
-
-
-def write_sf_tables(out_dir: str, seed: int, sf: float) -> dict[str, int]:
-    """Write events/documents/embeddings/lineitem for scale ``sf``;
-    return the row count of each table."""
-    rng = np.random.default_rng(seed)
-    os.makedirs(out_dir, exist_ok=True)
-    tables = {
-        "events": _events(rng, sf),
-        "documents": _documents(rng, sf),
-        "embeddings": _embeddings(rng, sf),
-        "lineitem": _lineitem(rng, sf),
-    }
-    for name, table in tables.items():
-        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
-    return {name: t.num_rows for name, t in tables.items()}
-
-
-def _events(rng: np.random.Generator, sf: float) -> pa.Table:
-    n = int(1_000_000 * sf)
-    n_users = max(4, int(15_000 * sf))
-    ts = np.sort(rng.integers(0, 30 * 86_400 * 1_000_000, n)) + EPOCH_2024_US
-    types = np.array(["click", "view", "purchase", "signup", "error"])
-    return pa.table(
-        {
-            "event_id": pa.array(np.arange(n, dtype=np.int64)),
-            "ts": pa.array(ts, type=pa.timestamp("us")),
-            "user_id": pa.array(rng.integers(0, n_users, n, dtype=np.int64)),
-            "event_type": pa.array(types[rng.integers(0, len(types), n)]),
-            "value": pa.array(np.round(rng.exponential(50.0, n), 2)),
-            "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n)]),
-        }
-    )
-
-
-def _documents(rng: np.random.Generator, sf: float) -> pa.Table:
-    n = max(20, int(50_000 * sf))
-    vocab = np.array(VOCAB)
-    texts: list[str] = []
-    for i in range(n):
-        if i >= 10 and rng.random() < 0.05:
-            # near-duplicate of an earlier doc (one word replaced), so the
-            # LSH and Jaccard pair queries have pairs to find
-            words = texts[int(rng.integers(0, i))].split()
-            words[int(rng.integers(0, len(words)))] = str(vocab[rng.integers(0, len(vocab))])
-        else:
-            words = list(vocab[rng.integers(0, len(vocab), int(rng.integers(10, 101)))])
-        texts.append(" ".join(words))
-    return pa.table(
-        {
-            "doc_id": pa.array(np.arange(n, dtype=np.int64)),
-            "text": pa.array(texts),
-            "lang": pa.array([LANGS[k] for k in rng.integers(0, len(LANGS), n)]),
-            "source": pa.array([f"src{k}" for k in rng.integers(0, 20, n)]),
-            "n_chars": pa.array(np.array([len(t) for t in texts], dtype=np.int64)),
-        }
-    )
-
-
-def _embeddings(rng: np.random.Generator, sf: float) -> pa.Table:
-    n = max(20, int(20_000 * sf))
-    v = rng.standard_normal((n, 64))
-    v = (v / np.linalg.norm(v, axis=1, keepdims=True)).astype(np.float32)
-    return pa.table(
-        {
-            "vec_id": pa.array(np.arange(n, dtype=np.int64)),
-            "embedding": pa.FixedSizeListArray.from_arrays(pa.array(v.ravel()), 64).cast(
-                pa.list_(pa.float32())
-            ),
-            "label": pa.array(rng.integers(0, 10, n, dtype=np.int32)),
-        }
-    )
-
-
-def _lineitem(rng: np.random.Generator, sf: float) -> pa.Table:
-    n = int(6_000_000 * sf)
-    qty = rng.integers(1, 51, n).astype(np.float64)
-    price = np.round(qty * rng.uniform(900.0, 2100.0, n), 2)
-    ship = EPOCH_2024_US - rng.integers(0, 7 * 365 * 86_400, n) * 1_000_000
-    return pa.table(
-        {
-            "l_orderkey": pa.array(rng.integers(1, max(2, int(1_500_000 * sf)), n, dtype=np.int64)),
-            "l_partkey": pa.array(rng.integers(1, max(2, int(200_000 * sf)), n, dtype=np.int64)),
-            "l_suppkey": pa.array(rng.integers(1, max(2, int(10_000 * sf)), n, dtype=np.int64)),
-            "l_linenumber": pa.array(rng.integers(1, 8, n, dtype=np.int32)),
-            "l_quantity": pa.array(qty),
-            "l_extendedprice": pa.array(price),
-            "l_discount": pa.array(np.round(rng.integers(0, 11, n) / 100.0, 2)),
-            "l_tax": pa.array(np.round(rng.integers(0, 9, n) / 100.0, 2)),
-            "l_returnflag": pa.array(np.array(["A", "N", "R"])[rng.integers(0, 3, n)]),
-            "l_linestatus": pa.array(np.array(["O", "F"])[rng.integers(0, 2, n)]),
-            "l_shipdate": pa.array(ship, type=pa.timestamp("us")),
-        }
-    )
 
 
 def skewed_sequences(seed: int, n_short: int, short_range: tuple[int, int]) -> pd.DataFrame:

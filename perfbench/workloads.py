@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from seizury_hrv_featuresextraction_spark.config import DEFAULT_CONFIG
 from seizury_hrv_featuresextraction_spark.functions.hrv import ALL_FEATURES, WindowKernel
 
-from fixtures import skewed_sequences, write_sf_tables, write_split
+from fixtures import skewed_sequences, write_split
 
 # bench.py's HEADLINE list, copied so that the benchmark's operation mix
 # only changes when the benchmark itself does
@@ -47,6 +47,11 @@ KERNEL_PARTS = sorted(WindowKernel.ALL_PARTS)
 # the time one benchmark run may use; 4 keeps the per-bucket path (write,
 # manifest, resume skip) at half the job count.
 N_BUCKETS = 4
+# the kernel probe times each part alone and all parts at once; each part
+# alone repeats the work the parts share, so their sum is a little more
+# than the whole (1.07 on a 4-core box, 1.16 at the smoke-test size).
+# Outside this range the parts do not add up to what the kernel runs.
+PARTS_OVER_ALL_RANGE = (0.8, 1.5)
 
 
 def _noop(df) -> None:
@@ -84,6 +89,7 @@ class SkewedResumable:
         self.results = None
         self.resumed = None
         self.out = None
+        self.parts_over_all = None  # set by the kernel probe (traced runs)
 
     # -- set-up -------------------------------------------------------------
     def build(self, spark, k: int) -> dict[str, float]:
@@ -154,6 +160,11 @@ class SkewedResumable:
         out.append(("window count per doc == closed-form grid", got == expected))
 
         out.extend(self._oracle_checks(feats))
+        out.append(self._seam_check(feats))
+        if self.parts_over_all is not None:
+            lo, hi = PARTS_OVER_ALL_RANGE
+            out.append((f"kernel parts sum / kernel.all_s in [{lo}, {hi}]",
+                        lo <= self.parts_over_all <= hi))
         return out
 
     def _oracle_checks(self, feats) -> list[tuple[str, bool]]:
@@ -169,16 +180,24 @@ class SkewedResumable:
         exp = oracle_pipeline(
             self.pdf[self.pdf["doc_id"] == doc], self.pann[self.pann["doc_id"] == doc], DEFAULT_CONFIG
         ).sort_values("window_id").reset_index(drop=True)
-        act = feats.filter(F.col("doc_id") == doc).toPandas().sort_values("window_id").reset_index(drop=True)
-        ok = len(act) == len(exp) > 0
-        for c in ["window_id", "n_beats", "label"]:
-            ok = ok and bool((act[c].to_numpy() == exp[c].to_numpy()).all())
-        for c in ["window_start_time", "window_center_time", "window_end_time"] + ALL_FEATURES:
-            ok = ok and np.allclose(
-                act[c].to_numpy(dtype=float), exp[c].to_numpy(dtype=float),
-                rtol=1e-9, atol=1e-12, equal_nan=True,
-            )
-        return [(f"oracle features and labels of {doc}", bool(ok))]
+        return [(f"oracle features and labels of {doc}", _same_windows(_doc_rows(feats, doc), exp))]
+
+    def _seam_check(self, feats) -> tuple[str, bool]:
+        """The long doc is the one the skew split cuts into chunks (the
+        short docs fit one chunk each): compare its output with the same
+        doc computed as one chunk, so that an error at a chunk seam shows
+        in the values and not only in the window counts. Both plans chunk
+        a doc the same way, so the reference lifts the chunk cap."""
+        from dataclasses import replace
+
+        from seizury_hrv_featuresextraction_spark.plans.hrv_pipeline import extract_features
+
+        doc = str(self.pdf.loc[self.pdf["n_tok"].idxmax(), "doc_id"])
+        one = F.col("doc_id") == doc
+        cfg = replace(DEFAULT_CONFIG, max_windows_per_chunk=2**31 - 1)
+        whole = extract_features(self.seq.filter(one), self.ann.filter(one), cfg, fused=True)
+        return (f"long doc {doc} == the doc as one chunk",
+                _same_windows(_doc_rows(feats, doc), _doc_rows(whole, doc)))
 
     # -- per-layer probes (traced runs) -------------------------------------
     def last_call_metrics(self) -> dict[str, float]:
@@ -273,25 +292,48 @@ class SkewedResumable:
         m = {f"kernel.{p}_s": statistics.median(v) for p, v in runs.items()}
         m["kernel.windows_per_s"] = len(pick) / m["kernel.all_s"]
         m["kernel.parts_over_all"] = sum(m[f"kernel.{p}_s"] for p in KERNEL_PARTS) / m["kernel.all_s"]
+        self.parts_over_all = m["kernel.parts_over_all"]
         return m
 
 
+def _doc_rows(feats, doc: str):
+    rows = feats.filter(F.col("doc_id") == doc).toPandas()
+    return rows.sort_values("window_id").reset_index(drop=True)
+
+
+def _same_windows(act, exp) -> bool:
+    """Same windows, exact counts and labels, times and features within
+    rtol 1e-9 / atol 1e-12."""
+    ok = len(act) == len(exp) > 0
+    for c in ["window_id", "n_beats", "label"]:
+        ok = ok and bool((act[c].to_numpy() == exp[c].to_numpy()).all())
+    for c in ["window_start_time", "window_center_time", "window_end_time"] + ALL_FEATURES:
+        ok = ok and np.allclose(
+            act[c].to_numpy(dtype=float), exp[c].to_numpy(dtype=float),
+            rtol=1e-9, atol=1e-12, equal_nan=True,
+        )
+    return bool(ok)
+
+
 # at sf0.1 (bench.py's scale) one query pass takes ~35 s on 4 cores, too
-# long for a benchmark run of about a minute; at sf0.01 it takes ~15 s
+# long for a benchmark run of about a minute; at sf0.01 it takes ~20 s
 SF = 0.01
+# copies of the engine's seed-42 test tables (TESTDATA.md) that the ten
+# headline queries read, at sf0.01 and at sf0.001 for the smoke test
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+TABLES = ("events", "documents", "embeddings", "lineitem")
 
 
 class OperatorSuite:
     """bench.py's ten headline queries (``plans/driver_queries.py``) over
-    seeded sf-scale tables, each into a noop sink, in a fixed order."""
+    the engine's test tables, each into a noop sink, in a fixed order.
+    The tables are fixed, so the seed does not change this workload."""
 
     name = "operator_suite"
 
     def __init__(self, work: str, seed: int, nproc: int, small: bool = False):
-        self.work = work
-        self.seed = seed
         self.sf = 0.001 if small else SF
-        self.sf_dir = os.path.join(work, "tables")
+        self.sf_dir = os.path.join(DATA, f"sf{self.sf:g}")
         self.query_s: dict[str, float] = {}
         self.rows: dict[str, int] = {}
         self.span = lambda name: contextlib.nullcontext()  # run.py sets the tracer's
@@ -299,11 +341,7 @@ class OperatorSuite:
     def build(self, spark, k: int) -> dict[str, float]:
         from seizury_hrv_featuresextraction_spark.sources.registry import load_table
 
-        if k == 0:
-            self.counts = write_sf_tables(self.sf_dir, self.seed, self.sf)
-        for name, n in self.counts.items():
-            if load_table(spark, self.sf_dir, name).count() != n:
-                raise RuntimeError(f"table {name}: read-back count differs from {n}")
+        self.counts = {name: load_table(spark, self.sf_dir, name).count() for name in TABLES}
         # the only token input of the suite: events-derived RR sequences,
         # one token per event (hrv_time_features_windows)
         self.tokens = self.counts["events"]
