@@ -69,7 +69,7 @@ def input_fingerprints(
     src = hashes(sequences, ["doc_id", "n_tok"])
     if annotations is not None:
         # ONE job for both sides (the action-count discipline pins one
-        # action per bucket + one stats probe + this single fp pre-pass)
+        # action per bucket + this single fp pre-pass)
         src = src.unionByName(hashes(annotations, list(annotations.columns)))
     rows = (
         src.groupBy("b")
@@ -82,38 +82,6 @@ def input_fingerprints(
 
 def _manifest_dir(output_path: str) -> str:
     return os.path.join(output_path, "_manifest")
-
-
-def _table_fp(in_fps: dict[int, int]) -> int:
-    """Whole-table fingerprint from the per-bucket ones: an explicit
-    64-bit multiply/xor fold over buckets in key order — NOT the builtin
-    ``hash(tuple(...))``, whose value is CPython-implementation-specific
-    (an interpreter change would silently invalidate every recorded
-    table_stats.json and force benign-but-surprising stats re-probes)."""
-    fp = 0x9E3779B97F4A7C15  # non-zero seed so an empty dict != bucket {0: 0}
-    for k in sorted(in_fps):
-        fp = ((fp * 1_000_003) ^ (in_fps[k] & 0xFFFFFFFFFFFFFFFF)) & 0xFFFFFFFFFFFFFFFF
-    return fp
-
-
-def _table_stats_path(output_path: str) -> str:
-    return os.path.join(_manifest_dir(output_path), "table_stats.json")
-
-
-def _read_table_stats(output_path: str) -> dict | None:
-    p = _table_stats_path(output_path)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _write_table_stats(output_path: str, rec: dict) -> None:
-    os.makedirs(_manifest_dir(output_path), exist_ok=True)
-    tmp = _table_stats_path(output_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, _table_stats_path(output_path))
 
 
 def manifest_path(output_path: str, bucket: int) -> str:
@@ -203,46 +171,14 @@ def run_resumable(
     that as a mismatch and recomputes (never serves buckets whose input
     was not validated when written).
     """
-    from .plans.hrv_pipeline import extract_features, plan_stats
+    from .plans.hrv_pipeline import extract_features
 
     cfg_hash = cfg.config_hash()
     done = read_manifest(output_path)
     results: list[BucketResult] = []
     seq_b = sequences.withColumn("__bucket", bucket_of(F.col("doc_id"), n_buckets))
+    # the only job before the buckets: the plan needs no table stats
     in_fps = input_fingerprints(sequences, annotations, n_buckets) if check_input else {}
-    # physical-plan stats probed ONCE for the whole table and reused per
-    # bucket (a bucket filter is a narrow op — same split count): the
-    # fused/chunked auto-selection must not pay one stats job per bucket.
-    # When the input fingerprint proves the table unchanged since the
-    # last run, even that single probe is skipped — max(n_tok) rides the
-    # recorded table stats (the Iceberg stats-in-snapshot pattern), so an
-    # all-skipped resume costs exactly ONE job (the fp pre-pass).
-    table_fp = _table_fp(in_fps) if check_input else None
-    prev_stats = _read_table_stats(output_path)
-    if (
-        table_fp is not None
-        and prev_stats is not None
-        and prev_stats.get("table_fp") == table_fp
-        and prev_stats.get("max_n_tok") is not None
-        and prev_stats.get("total_tokens") is not None
-    ):
-        stats = plan_stats(
-            sequences,
-            cfg,
-            known_max_n_tok=prev_stats["max_n_tok"],
-            known_total_tok=prev_stats["total_tokens"],
-        )
-    else:
-        stats = plan_stats(sequences, cfg)
-        if table_fp is not None and stats.get("max_n_tok") is not None:
-            _write_table_stats(
-                output_path,
-                {
-                    "table_fp": table_fp,
-                    "max_n_tok": stats["max_n_tok"],
-                    "total_tokens": stats["total_tokens"],
-                },
-            )
     completed = 0
     for k in range(n_buckets):
         prev = done.get(k)
@@ -266,7 +202,10 @@ def run_resumable(
             continue
         t0 = time.time()
         # observe() metrics ride the write job itself: ONE Spark action per
-        # bucket instead of count(input) + write + count(read-back)
+        # bucket instead of count(input) + write + count(read-back).
+        # ``part`` feeds both routing branches and the label side, so the
+        # plan holds one copy of obs_in per use; each sits below the
+        # routing filter and counts every doc of the bucket.
         from pyspark.sql import Observation
 
         obs_in = Observation(f"bucket_{k}_in")
@@ -276,7 +215,7 @@ def run_resumable(
             .drop("__bucket")
             .observe(obs_in, F.count(F.lit(1)).alias("n_docs"))
         )
-        feats = extract_features(part, annotations, cfg, stats=stats).observe(
+        feats = extract_features(part, annotations, cfg).observe(
             obs_out, F.count(F.lit(1)).alias("row_count")
         )
         out_dir = os.path.join(output_path, f"bucket={k}")

@@ -61,7 +61,10 @@ class HRVConfig:
     rr_max_seconds: float = 2.0
 
     # --- physical layer ---
-    max_windows_per_chunk: int = 512  # salted split threshold for long docs
+    # windows per chunk; a doc of more than _FUSED_SKEW_HEADROOM x this
+    # many windows takes the flagship's split + repartition branch
+    # (plans/hrv_pipeline.py)
+    max_windows_per_chunk: int = 512
     repartition_chunks: bool = True
     target_partitions: int = 0        # 0 -> spark.sql.shuffle.partitions
 

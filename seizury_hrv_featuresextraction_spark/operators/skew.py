@@ -5,13 +5,16 @@ atomic; skew shows up as a handful of 20-80k-token docs pinning single
 tasks (the reference has the same problem — one long EDF recording = one
 slow worker with only a 600 s timeout, data_processing_pipeline.py:905).
 
-``explode_chunks`` is an Arrow-vectorized mapInPandas that slices each
+``explode_chunks`` is an Arrow-vectorized mapInArrow that slices each
 doc's decoded tachogram into self-contained chunks of at most
 ``max_windows_per_chunk`` windows. Chunks overlap by ``window - stride``
 seconds of RR rows so no window spans a chunk boundary — results are
 exactly the per-doc computation, just re-batched. A plain round-robin
 ``repartition`` afterwards spreads the chunks of a long doc across the
-cluster; that is the flagship plan's ONE shuffle.
+cluster; that is the flagship plan's ONE shuffle. The flagship sends
+only its long docs here (more than ``_FUSED_SKEW_HEADROOM`` chunk caps
+of windows, ``plans/hrv_pipeline.py``); shorter docs are chunked by the
+same ``_chunk_batch`` inside the fused kernel stage, with no shuffle.
 
 At 100 TB: chunk size bounds both task runtime and task memory
 (each chunk carries <= max_windows * stride + window seconds of RR), so

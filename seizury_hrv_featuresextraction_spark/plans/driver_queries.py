@@ -2074,13 +2074,9 @@ def hrv_time_features_windows(spark, sf_dir):
     from .hrv_pipeline import extract_features
 
     seq = sequences_from_events(spark, sf_dir)
-    # fused=False == what the auto probe always resolves to for this wide
-    # derived input (n_splits probe is 0 for non-scan plans), minus the
-    # probe's extra aggregation job; features= skips the spectral GEMM
-    # and O(n^2) entropy groups this query never reads (guide §4.1).
-    feats = extract_features(
-        seq, None, DEFAULT_CONFIG, fused=False, features=TIME_FEATURES + ["TRI_INDEX"]
-    )
+    # features= skips the spectral GEMM and O(n^2) entropy groups this
+    # query never reads (guide §4.1).
+    feats = extract_features(seq, None, DEFAULT_CONFIG, features=TIME_FEATURES + ["TRI_INDEX"])
     return feats.filter(F.col("n_beats") >= 5).select(
         "doc_id",
         "window_id",
@@ -2542,9 +2538,7 @@ def hrv_spectral_poincare_windows(spark, sf_dir):
     cfg = HRVConfig(freq_min=0.003, freq_max=0.4, n_freqs=12)
     s = cfg.power_scale
     seq = sequences_from_events(spark, sf_dir)
-    feats = extract_features(
-        seq, None, cfg, fused=False, features=FREQ_FEATURES + ["SD1", "SD2", "SD1toSD2"]
-    )
+    feats = extract_features(seq, None, cfg, features=FREQ_FEATURES + ["SD1", "SD2", "SD1toSD2"])
     return feats.filter(F.col("n_beats") >= 5).select(
         "doc_id",
         "window_id",
@@ -2653,9 +2647,7 @@ def hrv_entropy_windows(spark, sf_dir):
     seq = sequences_from_events(spark, sf_dir).filter(
         F.substring_index("doc_id", "-", -1).cast("long") % 3 == 2
     )
-    feats = extract_features(
-        seq, None, DEFAULT_CONFIG, fused=False, features=["SampEn", "ApEn"]
-    )
+    feats = extract_features(seq, None, DEFAULT_CONFIG, features=["SampEn", "ApEn"])
     return feats.filter(F.col("n_beats") >= 5).select(
         "doc_id",
         "window_id",
@@ -3747,7 +3739,7 @@ def hrv_welch_windows(spark, sf_dir):
     seq = sequences_from_events(spark, sf_dir).filter(
         F.substring_index("doc_id", "-", -1).cast("long") % 5 == 2
     )
-    feats = extract_features(seq, None, cfg, fused=False, features=FREQ_FEATURES)
+    feats = extract_features(seq, None, cfg, features=FREQ_FEATURES)
     return feats.filter(F.col("n_beats") >= 5).select(
         "doc_id",
         "window_id",

@@ -3,9 +3,14 @@
 Logical plan (SURVEY.md §4's physical sketch, Spark-first):
 
     parquet/iceberg scan (doc_id, tokens)         column-pruned
-      -> mapInArrow explode_chunks                narrow, Arrow
-      -> repartition(N)                           the ONE shuffle (skew)
-      -> mapInArrow hrv_kernel                    narrow, Arrow, cached
+      -> route each doc by its exact window count (native fold of tokens)
+         <= _FUSED_SKEW_HEADROOM x max_windows_per_chunk windows:
+           -> mapInArrow fused chunk+kernel       narrow, Arrow, no shuffle
+         longer docs only:
+           -> mapInArrow explode_chunks           narrow, Arrow
+           -> repartition(N)                      the ONE shuffle (skew)
+           -> mapInArrow hrv_kernel               narrow, Arrow
+      -> union of the two branches                both kernels reuse cached
                                                   Lomb-Scargle designs
       -> broadcast join label intervals           no shuffle
       -> project to output schema
@@ -23,10 +28,11 @@ plus exact label equality.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, HRVConfig
@@ -143,9 +149,8 @@ def _kernel_batches(cfg: HRVConfig, features: list[str] | None = None):
 
 def _fused_batches(cfg: HRVConfig, features: list[str] | None = None):
     """tokens -> windowed features in ONE Arrow stage (no intermediate
-    chunk rows, no shuffle, one JVM<->Python crossing). The right plan
-    when doc lengths are bounded / pre-bucketed so no rebalancing is
-    needed; ``extract_features(..., fused=True)`` selects it."""
+    chunk rows, no shuffle, one JVM<->Python crossing): the branch for
+    every doc short enough that no rebalancing is needed."""
     import pyarrow as pa
 
     from ..operators.skew import _chunk_batch
@@ -165,120 +170,54 @@ def _fused_batches(cfg: HRVConfig, features: list[str] | None = None):
     return gen
 
 
+def _total_ms() -> Column:
+    return F.aggregate("tokens", F.lit(0).cast("long"), lambda acc, x: acc + x.cast("long"))
+
+
+def _n_samples(total_ms: Column, cfg: HRVConfig) -> Column:
+    return F.floor(total_ms * cfg.sampling_rate / 1000).cast("long")
+
+
 def doc_dimensions(sequences: DataFrame, cfg: HRVConfig) -> DataFrame:
     """(doc_id, total_ms, n_samples) via a native array fold — exact
     integer arithmetic, stays in the JVM."""
-    total_ms = F.aggregate("tokens", F.lit(0).cast("long"), lambda acc, x: acc + x.cast("long"))
+    total_ms = _total_ms()
     return sequences.select(
-        "doc_id",
-        total_ms.alias("total_ms"),
-        F.floor(total_ms * cfg.sampling_rate / 1000).cast("long").alias("n_samples"),
+        "doc_id", total_ms.alias("total_ms"), _n_samples(total_ms, cfg).alias("n_samples")
     )
 
 
-def plan_stats(
-    sequences: DataFrame,
-    cfg: HRVConfig = DEFAULT_CONFIG,
-    known_max_n_tok: int | None = None,
-    known_total_tok: int | None = None,
-) -> dict:
-    """Cheap table stats for physical-plan selection.
-
-    - ``n_splits``: the scan's actual split count — the same information
-      Iceberg manifests expose as the file list. For NARROW plans this
-      is a plan-time metadata lookup (no job); for plans containing
-      exchanges the probe is skipped entirely (touching .rdd there would
-      finalize the AQE plan and can eagerly run shuffle stages — see
-      planutil.scan_num_partitions) and 0 is reported, which selects the
-      skew-safe chunked plan.
-    - ``max_windows_per_doc``: an UPPER BOUND on any one doc's window
-      count, derived from max(n_tok) x the physiologic RR ceiling
-      (cfg.rr_max_seconds). Computed from the n_tok int column only — a
-      column-pruned scan that never touches the token arrays; on an
-      Iceberg table this is a free upper_bounds stats lookup, so the
-      one-column agg here is the honest local stand-in. None when the
-      table has no n_tok column.
-
-    - ``total_tokens``: sum(n_tok) over the table — the job-size signal
-      that decides the fused-vs-chunked crossover (BENCH/scale_sweep.md:
-      chunked wins small jobs where fixed per-task overhead and mild
-      imbalance dominate; fused wins once per-core work amortizes them).
-      Measured in the SAME single column-pruned agg as max(n_tok) —
-      adding it costs nothing. On Iceberg this is a column-stats lookup.
-
-    ``known_max_n_tok``/``known_total_tok`` skip the agg job entirely —
-    run_resumable passes the values recorded in
-    ``_manifest/table_stats.json`` when the input fingerprint proves the
-    table is unchanged since they were measured (the Iceberg pattern:
-    stats ride the snapshot, not a fresh scan).
-    """
-    from ..planutil import scan_num_partitions
-
-    sc = sequences.sparkSession.sparkContext
-    n_splits = scan_num_partitions(sequences) or 0
-    max_win = None
-    mx, total = known_max_n_tok, known_total_tok
-    if mx is None and "n_tok" in sequences.columns:
-        row = sequences.agg(
-            F.max("n_tok").alias("mx"), F.sum(F.col("n_tok").cast("long")).alias("total")
-        ).collect()[0]
-        mx, total = row["mx"], row["total"]
-    if mx is not None:
-        max_ms = int(mx) * int(cfg.rr_max_seconds * 1000)
-        n_samp = max_ms * cfg.sampling_rate // 1000
-        max_win = max(0, (n_samp - cfg.window_samples()) // cfg.step_samples() + 1)
-    return {
-        "n_splits": n_splits,
-        "parallelism": sc.defaultParallelism,
-        "max_windows_per_doc": max_win,
-        "max_n_tok": int(mx) if mx is not None else None,
-        "total_tokens": int(total) if total is not None else None,
-    }
+def _window_count(cfg: HRVConfig) -> Column:
+    """A doc's exact window count, ``(n_samples - window) // step + 1``,
+    folded natively from ``tokens`` like ``doc_dimensions``. Not above 0
+    for a doc shorter than one window; null for null tokens."""
+    n = _n_samples(_total_ms(), cfg)
+    return F.floor((n - F.lit(cfg.window_samples())) / F.lit(cfg.step_samples())).cast("long") + 1
 
 
-# a fused task processes whole docs; allow docs up to this many chunk
-# caps before the chunk-split plan's rebalancing is worth its shuffle
+# a fused task processes whole docs; a doc of up to this many chunk caps
+# of windows costs less there than split, shuffled and crossed into
+# Python a second time
 _FUSED_SKEW_HEADROOM = 8
 
-# fused-vs-chunked volume crossover, calibrated from the INTERLEAVED
-# same-action sweep (BENCH/scale_sweep.md, r5): below ~500k tokens/core
-# the job is overhead-dominated and fused's avoided shuffle round-trip
-# is the whole gap (1M tokens: fused 2.6x chunked; 4M: 1.4x); at ~20M
-# tokens (625k/core) the two plans measure equal, and above it the
-# chunked plan's rebalancing edges ahead (100M: chunked 1.1x). NB the
-# r4 bench's apparent opposite ordering at 4M compared a count() timing
-# against a noop-write timing — different actions; bench.py now times
-# all three variants interleaved under the same action.
-_FUSED_MAX_TOKENS_PER_CORE = 500_000
+
+def _fused_limit(cfg: HRVConfig) -> int:
+    return _FUSED_SKEW_HEADROOM * cfg.max_windows_per_chunk
+
+
+def plan_stats(sequences: DataFrame, cfg: HRVConfig = DEFAULT_CONFIG) -> dict:
+    """Whole-table view of ``extract_features``' routing rule: the largest
+    doc's window count (one aggregation job). The plan itself evaluates
+    the rule per doc and never calls this."""
+    mx = sequences.agg(F.max(_window_count(cfg))).collect()[0][0]
+    return {"max_windows_per_doc": None if mx is None else int(mx)}
 
 
 def choose_fused(stats: dict, cfg: HRVConfig = DEFAULT_CONFIG) -> bool:
-    """Pick the physical plan from table stats (VERDICT r3 item 3; token
-    volume added r5 per VERDICT r4 item 3).
-
-    fused (zero-shuffle single Arrow stage) iff ALL of:
-    - the scan already has >= cluster parallelism splits (otherwise the
-      chunk path's repartition manufactures the missing parallelism —
-      the measured 1-file case where fused serializes),
-    - no single doc can exceed ``_FUSED_SKEW_HEADROOM`` chunk caps of
-      windows (otherwise one doc straggles a whole fused task; the chunk
-      split bounds per-task work at max_windows_per_chunk), and
-    - the job is small enough to be overhead-dominated:
-      total_tokens <= ``_FUSED_MAX_TOKENS_PER_CORE`` x parallelism.
-      Below the crossover fused's avoided shuffle is a measured 1.4-2.6x
-      win; above it the plans are equal-to-chunked-favoring, and the
-      chunk split's skew rebalancing is the safer side at scale.
-    Unknown stats fall back to the skew-safe chunked plan.
-    """
-    if stats["n_splits"] < stats["parallelism"]:
-        return False
+    """Whether every doc of the table ``plan_stats`` measured takes the
+    fused branch."""
     mw = stats["max_windows_per_doc"]
-    if mw is None or mw > cfg.max_windows_per_chunk * _FUSED_SKEW_HEADROOM:
-        return False
-    tt = stats.get("total_tokens")
-    if tt is None or tt > _FUSED_MAX_TOKENS_PER_CORE * stats["parallelism"]:
-        return False
-    return True
+    return mw is None or mw <= _fused_limit(cfg)
 
 
 def extract_features(
@@ -291,17 +230,20 @@ def extract_features(
 ) -> DataFrame:
     """sequences + annotations -> labeled windowed feature table.
 
-    fused=None (default): AUTO — pick the plan from table stats
-    (``plan_stats``/``choose_fused``): split count vs parallelism and
-    the max-windows-per-doc upper bound. fused=False: chunk-split ->
-    repartition (skew rebalancing) -> kernel. fused=True: a single
-    narrow Arrow stage (zero shuffle) — right when the input is already
-    balanced (bucketed table, bounded doc length). ``stats`` overrides
-    the auto probe (e.g. from Iceberg manifest stats) so no plan-time
-    job runs.
+    Each doc is routed by its own exact window count. A doc of at most
+    ``_FUSED_SKEW_HEADROOM x cfg.max_windows_per_chunk`` windows, or with
+    null or empty tokens, goes through the fused single Arrow stage: one
+    JVM<->Python crossing, no shuffle. Only longer docs take
+    explode_chunks -> round-robin repartition -> kernel, so a long doc
+    is spread over many tasks instead of straggling one. The two branches
+    are unioned before labelling. The rule is a row predicate inside the
+    plan, so no job runs before the plan is built.
+
+    ``fused=True`` / ``fused=False`` sends every doc down the fused /
+    chunked branch: the same branch code with a constant predicate, and
+    the branch it would empty is not built. ``stats`` is accepted and
+    unused.
     """
-    if fused is None:
-        fused = choose_fused(stats or plan_stats(sequences, cfg), cfg)
     sel = list(features) if features is not None else list(ALL_FEATURES)
     if features is None:
         schema = FEATURES_ARROW_SCHEMA
@@ -312,17 +254,22 @@ def extract_features(
             [FEATURES_ARROW_SCHEMA[0], FEATURES_ARROW_SCHEMA[1], FEATURES_ARROW_SCHEMA[2]]
             + [T.StructField(name, T.DoubleType(), True) for name in sel]
         )
-    if fused:
-        feats = sequences.select("doc_id", "tokens").mapInArrow(
-            _fused_batches(cfg, features), schema=schema
-        )
+    seq = sequences.select("doc_id", "tokens")
+    if fused is None:
+        short = F.coalesce(_window_count(cfg) <= F.lit(_fused_limit(cfg)), F.lit(True))
     else:
-        chunks = explode_chunks(sequences, cfg)
+        short = F.lit(bool(fused))
+    branches = []
+    if fused is not False:
+        branches.append(seq.filter(short).mapInArrow(_fused_batches(cfg, features), schema=schema))
+    if fused is not True:
+        chunks = explode_chunks(seq.filter(~short), cfg)
         # explicit projection before the opaque Arrow stage (guide §4.1):
         # the kernel never reads chunk_id/n_samples, and Spark cannot see
         # inside mapInArrow to prune them itself
         chunks = chunks.select("doc_id", "win_lo", "n_win", "tok", "bounds", "rr_t")
-        feats = chunks.mapInArrow(_kernel_batches(cfg, features), schema=schema)
+        branches.append(chunks.mapInArrow(_kernel_batches(cfg, features), schema=schema))
+    feats = reduce(DataFrame.union, branches)
     # the four window-time/center columns are pure functions of window_id:
     # computed as native expressions AFTER the Arrow stage so the Python
     # boundary carries 32 fewer bytes per window (guide §4.1 — pass only

@@ -1,8 +1,8 @@
 """Plan-introspection helpers.
 
-``spread()`` and ``plan_stats()`` want the input split count as a pure
-plan-time metadata lookup. ``df.rdd.getNumPartitions()`` IS that lookup
-for a narrow plan (scan + project/filter), but under AQE touching
+``spread()`` wants the input split count as a pure plan-time metadata
+lookup. ``df.rdd.getNumPartitions()`` IS that lookup for a narrow plan
+(scan + project/filter), but under AQE touching
 ``.rdd`` on a plan that contains exchanges finalizes the adaptive plan
 and can eagerly execute upstream shuffle stages (ADVICE r4). The guard
 here inspects the optimized LOGICAL plan (analysis only — never runs a
@@ -46,8 +46,7 @@ def scan_num_partitions(df: DataFrame) -> int | None:
 
     None means "the plan has wide operators (or introspection failed) —
     probing .rdd could trigger execution, so don't": callers fall back
-    to their conservative default (spread() repartitions, plan_stats()
-    reports 0 splits which selects the skew-safe chunked plan).
+    to their conservative default (spread() repartitions).
     """
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
@@ -78,7 +77,7 @@ def scan_num_partitions(df: DataFrame) -> int | None:
             # wide operators are the expected reason to refuse; an
             # unknown LEAF/scan-looking node is worth one warning so a
             # renamed relation node in a future Spark doesn't silently
-            # degrade every spread()/plan_stats() call (safe direction:
+            # degrade every spread() call (safe direction:
             # the fallback only over-repartitions, never corrupts)
             if node not in _WARNED_NODES and (
                 "Relation" in node or "Scan" in node
@@ -112,9 +111,20 @@ def literal_array(values, sql_type: str):
     text parses exactly, and float repr() text parses as an exact
     DECIMAL (or an exponent DOUBLE literal) whose cast to DOUBLE is
     correctly rounded — recovering the exact IEEE bits repr() encodes.
-    Values must be finite numbers.
+    Each value is converted with ``int()`` for an integer ``sql_type``
+    and ``float()`` otherwise, so NumPy scalars format as plain numbers;
+    a non-finite value raises ``ValueError``.
     """
+    import math
+
     from pyspark.sql import functions as F
 
-    body = ",".join(repr(v) for v in values)
+    integral = sql_type.upper() in ("TINYINT", "SMALLINT", "INT", "INTEGER", "BIGINT", "LONG")
+    conv = int if integral else float
+    nums = []
+    for v in values:
+        if not math.isfinite(v):
+            raise ValueError(f"literal_array: non-finite value {v!r}")
+        nums.append(conv(v))
+    body = ",".join(repr(v) for v in nums)
     return F.expr(f"CAST(array({body}) AS ARRAY<{sql_type}>)")

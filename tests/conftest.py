@@ -30,6 +30,26 @@ def fixture_tables():
     return seq, ann
 
 
+@pytest.fixture(scope="session")
+def mixed_tables():
+    """(sequences, annotations, cfg) whose docs take both routing branches
+    of the flagship plan: at ``max_windows_per_chunk=16`` the fused limit
+    is 128 windows (640 s). One 1,500-beat doc (~1,200 s) is above it;
+    five 500-700-beat docs, one empty doc and one one-beat doc are not."""
+    short = make_sequences(n_docs=5, seed=7, short_range=(500, 700), long_frac=0.0)
+    long = make_sequences(n_docs=1, seed=8, short_range=(1500, 1500), long_frac=0.0)
+    long["doc_id"] = "sub-009_ses-01_run-01"
+    seq = pd.concat([short, long], ignore_index=True)
+    ann = make_annotations(seq, seed=7)
+    degenerate = pd.DataFrame(
+        [
+            {"doc_id": "sub-010_ses-01_run-01", "tokens": [], "n_tok": 0, "source": "synthetic-v1"},
+            {"doc_id": "sub-010_ses-01_run-02", "tokens": [800], "n_tok": 1, "source": "synthetic-v1"},
+        ]
+    )
+    return pd.concat([seq, degenerate], ignore_index=True), ann, HRVConfig(max_windows_per_chunk=16)
+
+
 def assert_frames_allclose(actual: pd.DataFrame, expected: pd.DataFrame, float_cols, key_cols, rtol=1e-9, atol=1e-12):
     a = actual.sort_values(key_cols, kind="mergesort").reset_index(drop=True)
     e = expected.sort_values(key_cols, kind="mergesort").reset_index(drop=True)

@@ -91,26 +91,56 @@ def test_resume_revalidates_and_one_action_per_bucket(spark, fixture_tables, tin
     run_resumable(spark, sdf, adf, out, tiny_cfg, n_buckets=2)
     delta = executions() - before
     # one action per bucket (the write; counts ride observe() metrics)
-    # plus exactly ONE table-stats probe per RUN (max n_tok, column-pruned
-    # — the fused/chunked auto-selection input, shared across buckets)
     # plus exactly ONE input-fingerprint pre-pass per RUN (r4 incremental
-    # resume; sequences and annotations hashed in a single union job)
-    assert delta == 4, f"expected one action per bucket + stats probe + fp pre-pass, saw {delta}"
+    # resume; sequences and annotations hashed in a single union job).
+    # The plan routes docs by a row predicate, so no stats job runs.
+    assert delta == 3, f"expected one action per bucket + fp pre-pass, saw {delta}"
 
-    # identical rerun: fingerprints match -> buckets skip AND the stats
-    # probe is skipped (max_n_tok rides _manifest/table_stats.json), so
-    # the whole resume costs exactly ONE job — the fp pre-pass
+    # identical rerun: fingerprints match -> buckets skip, so the whole
+    # resume costs exactly ONE job — the fp pre-pass
     before = executions()
     rerun = run_resumable(spark, sdf, adf, out, tiny_cfg, n_buckets=2)
     assert all(r.status == "skipped" for r in rerun)
     delta = executions() - before
     assert delta == 1, f"all-skipped resume must cost exactly the fp pre-pass, saw {delta}"
+    assert not os.path.exists(os.path.join(out, "_manifest", "table_stats.json"))
 
     shutil.rmtree(os.path.join(out, "bucket=0"))
     results = run_resumable(spark, sdf, adf, out, tiny_cfg, n_buckets=2)
     statuses = {r.bucket: r.status for r in results}
     assert statuses[0] == "ok", "deleted bucket output must be recomputed"
     assert statuses[1] == "skipped"
+
+
+def test_resume_manifests_count_both_routing_branches(spark, mixed_tables, tmp_path):
+    """Each bucket's observe() sits under both routing branches (and the
+    label side): on a table whose docs take both branches, every
+    manifest's n_docs and row_count must equal the docs and rows read
+    back for that bucket."""
+    from pyspark.sql import functions as F
+
+    from seizury_hrv_featuresextraction_spark.checkpoint import bucket_of
+
+    seq, ann, cfg = mixed_tables
+    sdf = spark.createDataFrame(seq, schema=SEQUENCES_SCHEMA)
+    adf = spark.createDataFrame(ann, schema=ANNOTATIONS_SCHEMA)
+    out = str(tmp_path / "mixed_out")
+    n_buckets = 3
+
+    results = run_resumable(spark, sdf, adf, out, cfg, n_buckets=n_buckets)
+    assert all(r.status == "ok" for r in results)
+    docs = {
+        r["b"]: r["n"]
+        for r in sdf.groupBy(bucket_of(F.col("doc_id"), n_buckets).alias("b"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    manifest = read_manifest(out)
+    assert sum(m["n_docs"] for m in manifest.values()) == len(seq)
+    for k in range(n_buckets):
+        rows = spark.read.parquet(f"{out}/bucket={k}").count()
+        assert manifest[k]["n_docs"] == docs.get(k, 0), (k, manifest[k])
+        assert manifest[k]["row_count"] == rows, (k, manifest[k])
 
 
 def test_config_change_invalidates(spark, fixture_tables, tiny_cfg, tmp_path):
@@ -382,18 +412,6 @@ def test_disabled_input_check_recomputes_under_validation(spark, fixture_tables,
 
     r3 = run_resumable(spark, sdf, adf, out, tiny_cfg, n_buckets=3, check_input=True)
     assert all(r.status == "skipped" for r in r3)
-
-
-def test_table_fp_is_interpreter_stable():
-    """ADVICE r4: the whole-table fingerprint is an explicit 64-bit fold,
-    not hash(tuple(...)) — pin exact values so an interpreter or Python
-    version change cannot silently invalidate recorded table stats."""
-    from seizury_hrv_featuresextraction_spark.checkpoint import _table_fp
-
-    assert _table_fp({0: -5, 1: 7}) == 11258907142070501003
-    assert _table_fp({1: 7, 0: -5}) == 11258907142070501003  # key-order independent
-    assert _table_fp({}) == 11400714819323198485
-    assert _table_fp({0: 0}) == 15547872573721600895  # empty != single-zero bucket
 
 
 def test_snapshot_log_tolerates_truncated_file(spark, fixture_tables, tiny_cfg, tmp_path):

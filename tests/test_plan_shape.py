@@ -194,50 +194,74 @@ def test_spread_conditional_no_shuffle_on_wide_input(spark, tmp_path):
     assert "RoundRobinPartitioning" in _plan(out2), _plan(out2)
 
 
-def test_flagship_auto_plan_selection(spark, tmp_path):
-    """VERDICT r3 item 3: extract_features defaults to AUTO plan selection
-    from table stats. A 1-split scan must choose the chunked plan (the
-    repartition manufactures parallelism); a wide scan of bounded docs
-    must choose fused (zero Exchange)."""
+def _union_children(df) -> list[str]:
+    """Plan text of each child of the first Union in ``df``'s physical
+    plan (before adaptive re-planning)."""
+
+    def find(node):
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+        if node.nodeName() == "Union":
+            return [k.toString() for k in kids]
+        for k in kids:
+            got = find(k)
+            if got is not None:
+                return got
+        return None
+
+    return find(df._jdf.queryExecution().executedPlan().inputPlan())
+
+
+def test_flagship_routes_each_doc_by_window_count(spark, mixed_tables):
+    """The default plan routes each doc by its own exact window count:
+    docs above the fused limit take the only shuffle, the rest take the
+    fused branch, and the union equals sending every doc down either
+    branch, window for window."""
+    from pyspark.sql import functions as F
+
+    from conftest import assert_frames_allclose
+    from seizury_hrv_featuresextraction_spark.functions.hrv import ALL_FEATURES
+    from seizury_hrv_featuresextraction_spark.oracle import oracle_pipeline
     from seizury_hrv_featuresextraction_spark.plans.hrv_pipeline import (
+        _fused_limit,
+        _window_count,
         choose_fused,
         plan_stats,
     )
+    from seizury_hrv_featuresextraction_spark.schemas import ANNOTATIONS_SCHEMA, SEQUENCES_SCHEMA
 
-    sdf, adf = _setup(spark, tmp_path)  # single parquet file -> 1 split
-    stats = plan_stats(sdf, DEFAULT_CONFIG)
-    assert stats["n_splits"] < stats["parallelism"]
-    assert choose_fused(stats, DEFAULT_CONFIG) is False
-    plan = _plan(extract_features(sdf, adf, DEFAULT_CONFIG))
-    assert "RoundRobinPartitioning" in plan
+    seq, ann, cfg = mixed_tables
+    sdf = spark.createDataFrame(seq, schema=SEQUENCES_SCHEMA)
+    adf = spark.createDataFrame(ann, schema=ANNOTATIONS_SCHEMA)
+    default = extract_features(sdf, adf, cfg)
 
-    wide = str(tmp_path / "seq_wide")
-    sdf.repartition(8).write.mode("overwrite").parquet(wide)
-    wdf = spark.read.parquet(wide)
-    wstats = plan_stats(wdf, DEFAULT_CONFIG)
-    assert wstats["n_splits"] >= wstats["parallelism"], wstats
-    assert wstats["max_windows_per_doc"] is not None
-    assert wstats["total_tokens"] is not None
-    # VERDICT r4 item 3: a wide-but-SMALL job picks fused — below the
-    # measured token-volume crossover the job is overhead-dominated and
-    # fused's avoided shuffle round-trip is the whole gap
-    from seizury_hrv_featuresextraction_spark.plans.hrv_pipeline import (
-        _FUSED_MAX_TOKENS_PER_CORE,
+    fused_branch, long_branch = sorted(_union_children(default), key=lambda t: t.count("MapInArrow"))
+    assert fused_branch.count("MapInArrow") == 1 and "Exchange" not in fused_branch, fused_branch
+    assert long_branch.count("MapInArrow") == 2, long_branch
+    assert re.findall(r"Exchange (\w+)", long_branch) == ["RoundRobinPartitioning"], long_branch
+
+    # the closed-form count is exact: it is each doc's output row count,
+    # and exactly one doc lies above the limit
+    n_win = {r[0]: max(0, r[1]) for r in sdf.select("doc_id", _window_count(cfg)).collect()}
+    got = default.toPandas()
+    assert got.groupby("doc_id").size().to_dict() == {d: n for d, n in n_win.items() if n}
+    assert [d for d, n in n_win.items() if n > _fused_limit(cfg)] == ["sub-009_ses-01_run-01"]
+    stats = plan_stats(sdf, cfg)
+    assert stats == {"max_windows_per_doc": n_win["sub-009_ses-01_run-01"]}
+    assert choose_fused(stats, cfg) is False
+    short_only = sdf.filter(F.col("doc_id") != "sub-009_ses-01_run-01")
+    assert choose_fused(plan_stats(short_only, cfg), cfg) is True
+
+    exact = ["doc_id", "window_id", "n_beats", "label"]
+    for fused in (True, False):
+        other = extract_features(sdf, adf, cfg, fused=fused).toPandas()
+        assert_frames_allclose(got, other, float_cols=ALL_FEATURES, key_cols=exact)
+
+    doc = seq["doc_id"].iloc[0]
+    exp = oracle_pipeline(seq[seq["doc_id"] == doc], ann[ann["doc_id"] == doc], cfg)
+    assert len(exp) > 0
+    assert_frames_allclose(
+        got[got["doc_id"] == doc], exp, float_cols=ALL_FEATURES, key_cols=["doc_id", "window_id", "label"]
     )
-
-    assert wstats["total_tokens"] <= _FUSED_MAX_TOKENS_PER_CORE * wstats["parallelism"]
-    assert choose_fused(wstats, DEFAULT_CONFIG) is True
-    plan = _plan(extract_features(wdf, None, DEFAULT_CONFIG, stats=wstats))
-    assert "Exchange" not in plan, plan
-    # ...and the same layout above the crossover flips to chunked (the
-    # rebalancing side wins once per-core work amortizes the shuffle)
-    big = dict(wstats, total_tokens=_FUSED_MAX_TOKENS_PER_CORE * wstats["parallelism"] + 1)
-    assert choose_fused(big, DEFAULT_CONFIG) is False
-
-    # a table whose max n_tok implies a straggler doc refuses fused even
-    # when wide and small (the chunk cap bounds per-task work)
-    huge = dict(wstats, max_windows_per_doc=DEFAULT_CONFIG.max_windows_per_chunk * 9)
-    assert choose_fused(huge, DEFAULT_CONFIG) is False
 
 
 def test_url_dedup_one_shuffle_no_broadcast(spark):
@@ -504,6 +528,24 @@ def test_scan_num_partitions_guard(spark):
         assert scan_num_partitions(cached.filter(F.col("v") >= 0).select("k")) == n
     finally:
         cached.unpersist()
+
+
+def test_literal_array_coerces_numpy_and_rejects_non_finite(spark):
+    """planutil.literal_array formats NumPy scalars as plain numbers per
+    sql_type and refuses non-finite values with a clear error."""
+    import numpy as np
+    import pytest
+
+    from seizury_hrv_featuresextraction_spark.planutil import literal_array
+
+    ints = literal_array([np.int64(5), np.int64(-2**40)], "BIGINT")
+    dbls = literal_array([np.float64(0.1), np.float64(1e-300), 2.5], "DOUBLE")
+    row = spark.range(1).select(ints.alias("i"), dbls.alias("d")).collect()[0]
+    assert row["i"] == [5, -2**40]
+    assert row["d"] == [0.1, 1e-300, 2.5]
+    for bad in (float("nan"), np.float64("inf")):
+        with pytest.raises(ValueError, match="non-finite"):
+            literal_array([1.0, bad], "DOUBLE")
 
 
 def test_shuffle_shards_one_exchange_no_global_sort(spark):

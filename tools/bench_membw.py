@@ -1,6 +1,6 @@
 """Memory-bandwidth probe (STREAM-triad style) for the scaling evidence.
 
-The executor-emulation bench (tools/bench_executors.py) shows per-process
+The executor-emulation bench (BENCH/executors.md) shows per-process
 slowdown when 4 pinned Spark processes run concurrently. This probe
 measures whether the box's DRAM bandwidth saturates below 32 cores —
 if aggregate triad bandwidth stops growing past ~8-16 workers, any

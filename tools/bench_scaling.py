@@ -80,7 +80,7 @@ def main():
     # values — env override, else the JSON written by the measuring tool;
     # NEVER a hardcoded fallback that silently stamps a stale round's
     # figures into the report (ADVICE r3)
-    def measured(env_key: str, json_name: str, json_key: str, tool: str) -> float:
+    def measured(env_key: str, json_name: str, json_key: str) -> float:
         if os.environ.get(env_key):
             return float(os.environ[env_key])
         path = os.path.join(REPO, "BENCH", json_name)
@@ -88,13 +88,13 @@ def main():
             with open(path) as f:
                 return float(json.load(f)[json_key])
         raise SystemExit(
-            f"{env_key} is unset and BENCH/{json_name} does not exist — run "
-            f"`python tools/{tool}` first (or set {env_key}) so the headline "
-            "reflects a real measurement, not a stale default"
+            f"{env_key} is unset and BENCH/{json_name} does not exist — set "
+            f"{env_key} so the headline reflects a real measurement, not a "
+            "stale default"
         )
 
-    exec_eff = measured("EXEC_EFF", "executors_latest.json", "exec_eff", "bench_executors.py")
-    group_ceil = measured("GROUP_CEIL", "hw_groups_latest.json", "group_ceil", "hw_groups.py")
+    exec_eff = measured("EXEC_EFF", "executors_latest.json", "exec_eff")
+    group_ceil = measured("GROUP_CEIL", "hw_groups_latest.json", "group_ceil")
     lines = [
         "# BENCH/BASELINE.md — scaling-efficiency evidence",
         "",
@@ -114,7 +114,7 @@ def main():
         "transfers to a real N -> 4N executor scale-up, where each executor",
         "brings its own memory system:",
         "",
-        f"- 4-JVM pinned executor emulation (tools/bench_executors.py): {exec_eff:.3f} of linear",
+        f"- 4-JVM pinned executor emulation (BENCH/executors_latest.json): {exec_eff:.3f} of linear",
         f"- framework-free topology ceiling (tools/hw_groups.py): {group_ceil:.2f} of linear",
         f"- **engine / ceiling = {exec_eff / group_ceil:.2f}** -> predicts >= 0.8 on real 4x-executor hardware",
         "",

@@ -1,16 +1,16 @@
-"""Framework-free twin of tools/bench_executors.py's process topology.
+"""Framework-free emulation of a 4-executor process topology.
 
-Runs the SAME per-chunk kernel workload as hw_ceiling.py, but in the
-exact process/pinning layout of the executor emulation: '1 executor' =
+Runs the SAME per-chunk kernel workload as hw_ceiling.py, in the
+process/pinning layout of four pinned Spark executors: '1 executor' =
 one 8-worker pool pinned to cores 0-7 computing ALL docs; '4 executors' =
 four concurrent 8-worker pools, each pinned to its own 8-core range,
 each computing a quarter of the docs, barrier-started.
 
 efficiency = T_1group / (4 * T_4group). Whatever this number is, it is
-the hardware ceiling for bench_executors.py's metric — the gap between
-the two is the framework (JVM + Arrow IPC + scheduling) cost, and the gap
-from 1.0 here is the shared-DRAM cost a real multi-machine cluster does
-not pay.
+the hardware ceiling for the executor-emulation efficiency recorded in
+BENCH/executors_latest.json — the gap between the two is the framework
+(JVM + Arrow IPC + scheduling) cost, and the gap from 1.0 here is the
+shared-DRAM cost a real multi-machine cluster does not pay.
 
 Usage: python tools/hw_groups.py   (env: GROUP_CORES=8, GROUP_DOCS=768,
 GROUP_TOKENS=30000)
